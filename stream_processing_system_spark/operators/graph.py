@@ -466,7 +466,10 @@ def neighbor_jaccard(
     # the whole query at sf0.1, value-identical). The bound check is
     # one cheap aggregate over the checkpointed edge list (NOT
     # data-dependent results — both branches compute identical
-    # values; ids beyond 31 bits just keep the two-column key).
+    # values; ids beyond 31 bits just keep the two-column key). Ids
+    # are cast to long before packing: on an int column the JVM shift
+    # by 32 wraps to a shift by 0, and (1, 5) would collide with
+    # (2, 4). Both branches emit u, v as long.
     bounds = und.agg(
         F.min(F.least("src", "dst")).alias("lo"),
         F.max(F.greatest("src", "dst")).alias("hi"),
@@ -485,7 +488,10 @@ def neighbor_jaccard(
                 & (F.col("a.u") < F.col("b.u")),
             )
             .select(
-                (F.shiftleft(F.col("a.u"), 32) + F.col("b.u")).alias("p")
+                (
+                    F.shiftleft(F.col("a.u").cast("long"), 32)
+                    + F.col("b.u").cast("long")
+                ).alias("p")
             )
         )
         common_p = pairs.groupBy("p").agg(
@@ -494,7 +500,10 @@ def neighbor_jaccard(
         existing_p = (
             und.where(F.col("src") < F.col("dst"))
             .select(
-                (F.shiftleft(F.col("src"), 32) + F.col("dst")).alias("p")
+                (
+                    F.shiftleft(F.col("src").cast("long"), 32)
+                    + F.col("dst").cast("long")
+                ).alias("p")
             )
             .distinct()
         )
@@ -514,11 +523,17 @@ def neighbor_jaccard(
                 (F.col("a.w") == F.col("b.w"))
                 & (F.col("a.u") < F.col("b.u")),
             )
-            .select(F.col("a.u").alias("u"), F.col("b.u").alias("v"))
+            .select(
+                F.col("a.u").cast("long").alias("u"),
+                F.col("b.u").cast("long").alias("v"),
+            )
         )
         existing = (
             und.where(F.col("src") < F.col("dst"))
-            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .select(
+                F.col("src").cast("long").alias("u"),
+                F.col("dst").cast("long").alias("v"),
+            )
             .distinct()
         )
         common = pairs.groupBy("u", "v").agg(

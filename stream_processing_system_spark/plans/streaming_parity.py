@@ -1,111 +1,63 @@
 """Streaming queries exposed through the driver contract.
 
-Each wrapper materializes the sf_dir table as a file-drop directory,
-runs the *streaming* plan with trigger(availableNow=True), and
-returns the drained result as a batch DataFrame. Registering these
-with the SAME DuckDB oracle as their batch twin turns the
-batch==streaming parity property (FIXTURES.md §3) into a
-driver-checked differential test, not just a unit test."""
+Each wrapper reads its catalog table as a stream straight from the
+catalog parquet (`load_table(..., streaming=True)`), runs the
+*streaming* plan through the one drain path (`jobs.drain`:
+trigger(availableNow=True), then the drained rows as a batch
+DataFrame), and applies any batch tail. A wrapper re-lays its input
+as a scratch drop directory only where the drop's format or file
+layout is what it tests: the reddit CSV and `crane_spout` text
+ingest paths, and the multi-file `maxFilesPerTrigger` drops of the
+upsert, KMV and soak twins. Registering these with the SAME DuckDB
+oracle as their batch twin turns the batch==streaming parity
+property (FIXTURES.md §3) into a driver-checked differential test,
+not just a unit test."""
 
 from __future__ import annotations
 
-import contextlib
 import os
-import shutil
-import tempfile
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stream_processing_system_spark.sources.tables import load_table
 from stream_processing_system_spark.streaming import jobs
 
 
-def _scratch(prefix: str) -> tuple[str, str, str]:
-    """Per-run scratch (input drop dir + checkpoint). The run id keeps
-    the memory-sink query name unique within a session (bench runs
-    each query twice); `_cleanup` removes the whole base dir as soon
-    as the drain finishes — the memory sink has materialized the
-    result by then, so nothing on disk is needed afterwards."""
-    run = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{prefix}_{run}")
-    return os.path.join(base, "in"), os.path.join(base, "ckpt"), run
-
-
-def _cleanup(input_dir: str) -> None:
-    base = os.path.dirname(input_dir.rstrip("/"))
-    with contextlib.suppress(OSError):
-        shutil.rmtree(base, ignore_errors=True)
-
-
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Pin spark.sql.shuffle.partitions to a small value for the
-    duration of a streaming-query START (the value is frozen into the
-    checkpoint at first batch): every stateful operator materializes
-    one state store PER shuffle partition PER batch, and at these
-    state sizes (10^2-10^6 keys) 32 stores are pure fixed overhead —
-    store init + commit + checkpoint fsync dominate the actual work.
-    At real scale you'd size this to cluster cores instead; it's a
-    per-QUERY knob precisely so the parity wrappers and a production
-    deployment can differ. Restores the session value on exit."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+def _cents(col: str = "value") -> Column:
+    """A double as integer hundredths (half-up): sums of these are
+    exact and independent of micro-batch and partition order."""
+    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
 
 
 def stream_wordcount_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q1_wordcount, but executed as a Structured Streaming job over
-    a file-drop copy of documents.text. Same oracle as q1_wordcount."""
-    input_dir, ckpt, run = _scratch("wc")
-    docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
-    docs.write.mode("overwrite").text(input_dir)
-    with _state_partitions(spark):
-        result = jobs.stream_wordcount(spark, input_dir, ckpt, name=f"wc_{run}")
-    _cleanup(input_dir)
-    return result.select(F.col("word"), F.col("cnt"))
+    the documents table streamed from the catalog. Same oracle as
+    q1_wordcount."""
+    from stream_processing_system_spark.plans.reference import wordcount
+
+    docs = load_table(spark, sf_dir, "documents", streaming=True)
+    return jobs.drain(wordcount(docs.select(F.col("text").alias("line"))))
 
 
 def stream_dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup as a streaming job: documents re-laid as a parquet
-    drop directory, then the digest groupBy + min-id keeper runs
-    incrementally (state = one row per distinct digest). Same oracle
-    as batch dedup_exact — a third batch==streaming differential
-    check. At scale this is the incremental-ingest dedup shape: new
-    files drop in, only new digests extend the state store, and
-    `update` mode emits just the changed keepers per batch."""
+    """Exact dedup as a streaming job: the documents stream feeds the
+    digest groupBy + min-id keeper incrementally (state = one row per
+    distinct digest). Same oracle as batch dedup_exact — a third
+    batch==streaming differential check. At scale this is the
+    incremental-ingest dedup shape: new files drop in, only new
+    digests extend the state store, and `update` mode emits just the
+    changed keepers per batch."""
     from stream_processing_system_spark.operators.dedup import normalized_text
 
-    input_dir, ckpt, run = _scratch("dd")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(input_dir)
+    stream = load_table(spark, sf_dir, "documents", streaming=True)
     keepers = (
         stream.select(F.md5(normalized_text(F.col("text"))).alias("_digest"), "doc_id")
         .groupBy("_digest")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    with _state_partitions(spark):
-        q = (
-            keepers.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"dd_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"dd_{run}")
+    return jobs.drain(keepers)
 
 
 def stream_dedup_watermark_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,10 +76,7 @@ def stream_dedup_watermark_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic) is returned."""
     from stream_processing_system_spark.operators.dedup import normalized_text
 
-    input_dir, ckpt, run = _scratch("ddwm")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(input_dir)
+    stream = load_table(spark, sf_dir, "documents", streaming=True)
     deduped = (
         stream.select(
             F.md5(normalized_text(F.col("text"))).alias("digest"),
@@ -137,70 +86,48 @@ def stream_dedup_watermark_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["digest"])
         .select("digest")
     )
-    with _state_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(f"ddwm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    return jobs.drain(deduped, "append").orderBy("digest")
+
+
+def _window_sums(
+    spark: SparkSession, sf_dir: str, out: str, duration: str, slide: str | None = None
+) -> DataFrame:
+    """Event-time (tumbling or hopping) window count + rounded value
+    sum, watermarked by the window length, drained in complete mode:
+    the drain must emit every window including the last open one;
+    the watermark is what bounds state when the same plan runs on an
+    unbounded stream."""
+    window = F.window("ts", duration, slide) if slide else F.window("ts", duration)
+    result = (
+        load_table(spark, sf_dir, "events", streaming=True)
+        .withWatermark("ts", duration)
+        .groupBy(window.alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"ddwm_{run}").orderBy("digest")
+        .select(F.col("w.start").cast("long").alias(out), "n", "sum_value")
+    )
+    return jobs.drain(result).orderBy(out)
 
 
 def stream_events_per_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window with a watermark, drained
     with availableNow — the streaming twin of events_per_hour (same
-    oracle). Complete output mode here because the drain must emit
-    every window including the last open one; the watermark is what
-    bounds state when the same plan runs on an unbounded stream."""
-    input_dir, ckpt, run = _scratch("eph")
-    events = load_table(spark, sf_dir, "events").select("ts", "value")
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("ts timestamp, value double").parquet(input_dir)
-    result = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("hour_start"),
-            "n",
-            "sum_value",
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"eph_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"eph_{run}").orderBy("hour_start")
+    oracle)."""
+    return _window_sums(spark, sf_dir, "hour_start", "1 hour")
 
 
 def stream_running_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom stateful operator (applyInPandasWithState running
-    count per line, §2.11 stateful-bolt surface) drained over a
-    file-drop copy of documents.text. Running counts are monotone, so
+    count per document text, §2.11 stateful-bolt surface) drained
+    over the documents stream. Running counts are monotone, so
     max(cnt) per key after the drain is the converged total — checked
     against a plain GROUP BY oracle, which makes the custom-state
     path value-hash verifiable, not just smoke-tested."""
-    input_dir, ckpt, run = _scratch("rc")
-    docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
-    docs.write.mode("overwrite").text(input_dir)
-    with _state_partitions(spark):
-        tbl = jobs.stream_running_counts(spark, input_dir, ckpt, name=f"rc_{run}")
-    _cleanup(input_dir)
+    docs = load_table(spark, sf_dir, "documents", streaming=True)
+    keys = docs.select(F.col("text").alias("key"))
+    tbl = jobs.drain(jobs.running_counts(keys), "update")
     return tbl.groupBy("key").agg(F.max("cnt").alias("cnt"))
 
 
@@ -209,26 +136,20 @@ def stream_user_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_events, sum value) maintained in custom streaming state
     (transformWithState where the runtime has the TWS runner's
     protobuf dependency, applyInPandasWithState otherwise — see
-    jobs.stream_user_stats) over an events file-drop. Values are quantized to integer micro-units
-    JVM-SIDE before the Python stage (order-independent integer sums
+    jobs.stream_user_stats) over the events stream. Values are
+    quantized to integer micro-units JVM-SIDE before the Python stage
+    (order-independent integer sums
     through arbitrary micro-batching), and the drained `update`
     output rolls up with max per key (totals are monotone). Checked
     against a plain GROUP BY oracle — the arbitrary-state path is
     value-hash verified, same standard as every built-in operator."""
-    input_dir, ckpt, run = _scratch("tws")
-    events = load_table(spark, sf_dir, "events").select(
+    stream = load_table(spark, sf_dir, "events", streaming=True).select(
         "user_id",
         F.coalesce(
             F.floor(F.col("value") * 10000 + 0.5).cast("long"), F.lit(0)
         ).alias("value_u"),
     )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("user_id bigint, value_u bigint").parquet(
-        input_dir
-    )
-    with _state_partitions(spark):
-        drained = jobs.stream_user_stats(spark, stream, ckpt, name=f"tws_{run}")
-    _cleanup(input_dir)
+    drained = jobs.stream_user_stats(spark, stream)
     return (
         drained.groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"), F.max("sum_u").alias("_s"))
@@ -250,14 +171,6 @@ def stream_enriched_revenue_events(spark: SparkSession, sf_dir: str) -> DataFram
     broadcast once per executor and the only stateful operator is the
     25-key aggregate. Revenue sums integer micro-units, so the total
     is independent of micro-batch boundaries and partition order."""
-    input_dir, ckpt, run = _scratch("ser")
-    events = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", "value"
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "user_id bigint, event_type string, value double"
-    ).parquet(input_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
@@ -265,9 +178,8 @@ def stream_enriched_revenue_events(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("n_nationkey").alias("c_nationkey"), "n_name"
     )
     result = (
-        stream.where(
-            (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-        )
+        load_table(spark, sf_dir, "events", streaming=True)
+        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
         .join(F.broadcast(cust), "user_id")
         .join(F.broadcast(nation), "c_nationkey")
         .groupBy("n_name")
@@ -279,18 +191,7 @@ def stream_enriched_revenue_events(spark: SparkSession, sf_dir: str) -> DataFram
             "n_name", "n_purchases", (F.col("_s") / F.lit(10000.0)).alias("revenue")
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"ser_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"ser_{run}").orderBy("n_name")
+    return jobs.drain(result).orderBy("n_name")
 
 
 def stream_reddit_top_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,8 +204,8 @@ def stream_reddit_top_users_events(spark: SparkSession, sf_dir: str) -> DataFram
     (`Nimbus.go:628-648`). The job ranks usernames as strings, so the
     wrapper re-ranks numerically after the cast back to long (string
     order '10'<'2' would pick a different tie-break at the top-k
-    boundary)."""
-    input_dir, ckpt, run = _scratch("rd")
+    boundary). The CSV drop is staged: the CSV format IS the ingest
+    path under test."""
     # null scores: batch `value >= 0` drops them, but an empty CSV cell
     # parses leniently to 0 and would be kept — filter before re-laying
     events = (
@@ -318,17 +219,14 @@ def stream_reddit_top_users_events(spark: SparkSession, sf_dir: str) -> DataFram
     # batch predicate `value >= 0` exactly
     cells[10] = F.floor(F.col("value")).cast("long").cast("string")
     cells[12] = F.col("user_id").cast("string")
-    events.select(F.concat_ws(",", *cells).alias("value")).write.mode(
-        "overwrite"
-    ).text(input_dir)
-    # k > distinct users at every SF (so nothing is cut before the
-    # numeric re-rank) but small enough that the job's top-k priority
-    # queue stays O(k) memory
-    with _state_partitions(spark):
-        drained = jobs.stream_reddit_top_users(
-            spark, input_dir, ckpt, k=1_000_000, name=f"rd_{run}"
-        )
-    _cleanup(input_dir)
+    with jobs.scratch_dir("rd") as input_dir:
+        events.select(F.concat_ws(",", *cells).alias("value")).write.mode(
+            "overwrite"
+        ).text(input_dir)
+        # k > distinct users at every SF (so nothing is cut before the
+        # numeric re-rank) but small enough that the job's top-k priority
+        # queue stays O(k) memory
+        drained = jobs.stream_reddit_top_users(spark, input_dir, k=1_000_000)
     return (
         drained.select(
             F.col("username").cast("long").alias("user_id"), F.col("posts")
@@ -351,15 +249,10 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure-zero, and the hash-match would catch one.)"""
     from stream_processing_system_spark.functions.scalar import det_round
 
-    input_dir, ckpt, run = _scratch("ss")
-    events = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("ts timestamp, user_id long").parquet(input_dir)
-    with _state_partitions(spark):
-        per_session = jobs.stream_session_windows(
-            spark, stream, ckpt, gap="30 minutes", watermark="1 hour", name=f"ss_{run}"
-        )
-    _cleanup(input_dir)
+    stream = load_table(spark, sf_dir, "events", streaming=True)
+    per_session = jobs.stream_session_windows(
+        spark, stream.select("ts", "user_id"), gap="30 minutes", watermark="1 hour"
+    )
     return (
         per_session.groupBy("user_id")
         .agg(
@@ -377,20 +270,12 @@ def stream_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same (entry_type, exit_type, n_sessions) matrix — SAME oracle
     as the batch query, proving the two session formulations AND the
     two endpoint extractions equivalent on static input."""
-    input_dir, ckpt, run = _scratch("see")
-    events = load_table(spark, sf_dir, "events").select(
+    stream = load_table(spark, sf_dir, "events", streaming=True).select(
         "ts", "user_id", "event_type", "event_id"
     )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, user_id long, event_type string, event_id long"
-    ).parquet(input_dir)
-    with _state_partitions(spark):
-        per = jobs.stream_session_endpoints(
-            spark, stream, ckpt, gap="30 minutes", watermark="1 hour",
-            name=f"see_{run}",
-        )
-    _cleanup(input_dir)
+    per = jobs.stream_session_endpoints(
+        spark, stream, gap="30 minutes", watermark="1 hour"
+    )
     return (
         per.groupBy("entry_type", "exit_type")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
@@ -399,63 +284,35 @@ def stream_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_host_report_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q3_host_report as a streaming job: events re-laid as a parquet
-    drop directory, then the same grouped count + sorted collect_set
-    plan runs incrementally (streaming collect_set state). Same
-    oracle as q3_host_report — a second batch==streaming differential
-    check, this one over a stateful multi-aggregate."""
+    """q3_host_report as a streaming job: the events stream feeds the
+    same grouped count + sorted collect_set plan incrementally
+    (streaming collect_set state). Same oracle as q3_host_report — a
+    second batch==streaming differential check, this one over a
+    stateful multi-aggregate."""
     from stream_processing_system_spark.plans.reference import host_report
 
-    input_dir, ckpt, run = _scratch("q3")
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "props"
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, event_type string, props string"
-    ).parquet(input_dir)
-    kept = stream.where(F.col("event_type") == "click")
+    events = load_table(spark, sf_dir, "events", streaming=True)
+    kept = events.where(F.col("event_type") == "click")
     route = F.concat(F.col("user_id").cast("string"), F.lit(":"), F.col("props"))
-    result = host_report(kept.withColumn("route", route), "user_id", F.col("route"))
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"q3_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"q3_{run}")
+    return jobs.drain(
+        host_report(kept.withColumn("route", route), "user_id", F.col("route"))
+    )
 
 
-def stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join (jobs.stream_stream_join) as a
-    driver-checked query: purchases and clicks arrive as two separate
-    file-drop streams, watermarked, joined on user_id with clicks
-    within 1 hour AFTER the purchase. The oracle is the equivalent
-    batch interval join — proving the streaming join's event-time
-    bounds against plain SQL. Output one row per (purchase, click)
-    pair with epoch-second timestamps."""
-    input_dir, ckpt, run = _scratch("ssj")
-    events = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    p_dir, c_dir = os.path.join(input_dir, "p"), os.path.join(input_dir, "c")
-    events.where(F.col("event_type") == "purchase").select("user_id", "ts").write.mode(
-        "overwrite"
-    ).parquet(p_dir)
-    events.where(F.col("event_type") == "click").select("user_id", "ts").write.mode(
-        "overwrite"
-    ).parquet(c_dir)
-    schema = "user_id long, ts timestamp"
-    purchases = spark.readStream.schema(schema).parquet(p_dir)
-    clicks = spark.readStream.schema(schema).parquet(c_dir)
-    with _state_partitions(spark):
-        joined = jobs.stream_stream_join(
-            spark, purchases, clicks, ckpt, within="1 hour", name=f"ssj_{run}"
-        )
-    _cleanup(input_dir)
+def _purchases_and_clicks(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Two streams over the events table: purchases and clicks, each
+    (user_id, ts)."""
+
+    def side(kind: str) -> DataFrame:
+        events = load_table(spark, sf_dir, "events", streaming=True)
+        return events.where(F.col("event_type") == kind).select("user_id", "ts")
+
+    return side("purchase"), side("click")
+
+
+def _pairs_by_purchase(joined: DataFrame) -> DataFrame:
     return joined.select(
         F.col("l_key").alias("user_id"),
         F.col("l_ts").cast("long").alias("purchase_ts_s"),
@@ -463,39 +320,25 @@ def stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "purchase_ts_s", "click_ts_s")
 
 
+def stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join (jobs.stream_stream_join) as a
+    driver-checked query: purchases and clicks arrive as two separate
+    streams, watermarked, joined on user_id with clicks
+    within 1 hour AFTER the purchase. The oracle is the equivalent
+    batch interval join — proving the streaming join's event-time
+    bounds against plain SQL. Output one row per (purchase, click)
+    pair with epoch-second timestamps."""
+    purchases, clicks = _purchases_and_clicks(spark, sf_dir)
+    return _pairs_by_purchase(
+        jobs.stream_stream_join(spark, purchases, clicks, within="1 hour")
+    )
+
+
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_sliding_window as a streaming job: hopping 2h/1h windows
     with a watermark, drained with availableNow — same oracle as the
     batch query, proving the hopping-window semantics match."""
-    input_dir, ckpt, run = _scratch("slw")
-    events = load_table(spark, sf_dir, "events").select("ts", "value")
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("ts timestamp, value double").parquet(input_dir)
-    result = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "n",
-            "sum_value",
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"slw_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"slw_{run}").orderBy("window_start")
+    return _window_sums(spark, sf_dir, "window_start", "2 hours", "1 hour")
 
 
 def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,63 +354,32 @@ def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_system_spark.functions.scalar import md5_prefix_long
 
     depth, width, k = 4, 256, 20
-    input_dir, ckpt, run = _scratch("hh")
-    events = load_table(spark, sf_dir, "events").select(
-        F.col("user_id"), F.col("user_id").cast("string").alias("_k")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
 
     def bucket(j, key):
         return F.pmod(md5_prefix_long(F.concat(F.lit(f"{j}|"), key)), F.lit(width))
 
-    stream = spark.readStream.schema("user_id bigint, _k string").parquet(input_dir)
-    cells = (
-        stream.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            bucket(j, F.col("_k")).alias("b"),
-                        )
-                        for j in range(depth)
-                    ]
-                )
-            ).alias("c")
+    def cells(key: Column) -> Column:
+        return F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(j).alias("j"), bucket(j, key).alias("b"))
+                    for j in range(depth)
+                ]
+            )
         )
+
+    counters = (
+        load_table(spark, sf_dir, "events", streaming=True)
+        .select(cells(F.col("user_id").cast("string")).alias("c"))
         .groupBy("c.j", "c.b")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with _state_partitions(spark):
-        q = (
-            cells.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"hh_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cell_tbl = spark.table(f"hh_{run}")
+    cell_tbl = jobs.drain(counters)
     probes = (
         load_table(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
-        .select(
-            "user_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            bucket(j, F.col("user_id").cast("string")).alias("b"),
-                        )
-                        for j in range(depth)
-                    ]
-                )
-            ).alias("p"),
-        )
+        .select("user_id", cells(F.col("user_id").cast("string")).alias("p"))
         .select("user_id", "p.j", "p.b")
     )
     return (
@@ -580,8 +392,8 @@ def stream_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily OHLC bars computed as an availableNow stream over a
-    file-drop copy of events — the streaming twin of
+    """Daily OHLC bars computed as an availableNow stream over the
+    events stream — the streaming twin of
     `analytics.events_ohlc_daily` (same oracle).
 
     Open/close use `min_by`/`max_by` keyed on the (ts, event_id)
@@ -593,19 +405,11 @@ def stream_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the drain must emit every day's bar; on an unbounded
     stream the same plan runs in update mode with a watermark on ts.
     """
-    input_dir, ckpt, run = _scratch("ohlc")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("event_id", "ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
     key = F.struct(F.col("ts"), F.col("event_id"))
     result = (
-        stream.withColumn("day", F.col("ts").cast("date").cast("string"))
+        load_table(spark, sf_dir, "events", streaming=True)
+        .where(F.col("value").isNotNull())
+        .withColumn("day", F.col("ts").cast("date").cast("string"))
         .groupBy("event_type", "day")
         .agg(
             F.min_by("value", key).alias("open"),
@@ -615,18 +419,7 @@ def stream_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_ticks"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"ohlc_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    return spark.table(f"ohlc_{run}").orderBy("event_type", "day")
+    return jobs.drain(result).orderBy("event_type", "day")
 
 
 def stream_purchase_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,43 +436,21 @@ def stream_purchase_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ends. The oracle is the equivalent batch LEFT JOIN under
     the same cutoff — proving both the match bounds AND the
     null-emission contract against plain SQL."""
-    input_dir, ckpt, run = _scratch("ssjo")
-    events = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     # The global watermark is the MIN across sources of (max event
     # time - delay): the cutoff must key off the EARLIER-ending
     # stream, or purchases after the click stream's horizon keep
     # their join state open forever and never emit their nulls.
     cutoff = (
-        events.where(F.col("event_type").isin("purchase", "click"))
+        load_table(spark, sf_dir, "events")
+        .where(F.col("event_type").isin("purchase", "click"))
         .groupBy("event_type")
         .agg(F.max("ts").alias("m"))
         .agg((F.min("m") - F.expr("interval 4 hours")).alias("c"))
         .collect()[0]["c"]
     )
-    p_dir, c_dir = os.path.join(input_dir, "p"), os.path.join(input_dir, "c")
-    events.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts"
-    ).write.mode("overwrite").parquet(p_dir)
-    events.where(F.col("event_type") == "click").select("user_id", "ts").write.mode(
-        "overwrite"
-    ).parquet(c_dir)
-    schema = "user_id long, ts timestamp"
-    purchases = spark.readStream.schema(schema).parquet(p_dir)
-    clicks = spark.readStream.schema(schema).parquet(c_dir)
-    with _state_partitions(spark):
-        joined = jobs.stream_stream_join_outer(
-            spark, purchases, clicks, ckpt, within="1 hour", name=f"ssjo_{run}"
-        )
-    _cleanup(input_dir)
-    return (
-        joined.where(F.col("l_ts") <= F.lit(cutoff))
-        .select(
-            F.col("l_key").alias("user_id"),
-            F.col("l_ts").cast("long").alias("purchase_ts_s"),
-            F.col("r_ts").cast("long").alias("click_ts_s"),
-        )
-        .orderBy("user_id", "purchase_ts_s", "click_ts_s")
-    )
+    purchases, clicks = _purchases_and_clicks(spark, sf_dir)
+    joined = jobs.stream_stream_join_outer(spark, purchases, clicks, within="1 hour")
+    return _pairs_by_purchase(joined.where(F.col("l_ts") <= F.lit(cutoff)))
 
 
 def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -689,61 +460,56 @@ def stream_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge really runs several times, then the final serving table is
     checked against the plain GROUP BY oracle (same oracle as
     stream_user_stats — two different stateful mechanisms, one
-    truth)."""
-    input_dir, ckpt, run = _scratch("ups")
-    state_dir = os.path.join(os.path.dirname(input_dir), "state")
+    truth). The multi-file drop is staged: its file layout is what
+    makes the drain multi-batch."""
     events = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.coalesce(
             F.floor(F.col("value") * 10000 + 0.5).cast("long"), F.lit(0)
         ).alias("value_u"),
     )
-    events.repartition(4).write.mode("overwrite").parquet(input_dir)
-    with _state_partitions(spark):
+    with jobs.scratch_dir("ups") as base:
+        input_dir = os.path.join(base, "in")
+        events.repartition(4).write.mode("overwrite").parquet(input_dir)
         serving = jobs.stream_upsert_totals(
-            spark, input_dir, ckpt, state_dir, name=f"ups_{run}"
+            spark, input_dir, None, os.path.join(base, "state")
         )
-    out = (
-        serving.select(
-            "user_id",
-            "n_events",
-            (F.col("sum_u") / F.lit(10000.0)).alias("sum_value"),
+        return (
+            serving.select(
+                "user_id",
+                "n_events",
+                (F.col("sum_u") / F.lit(10000.0)).alias("sum_value"),
+            )
+            .orderBy("user_id")
+            .localCheckpoint()  # materialize before the scratch dir is removed
         )
-        .orderBy("user_id")
-        .localCheckpoint()  # materialize before the scratch dir is removed
-    )
-    _cleanup(input_dir)
-    return out
 
 
 def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type distinct-user ESTIMATES from a KMV sketch maintained
     incrementally by the streaming foreachBatch merge
-    (jobs.stream_kmv_sketches) over a multi-file events drop. KMV
-    merge associativity makes the final sketch identical to the
+    (jobs.stream_kmv_sketches) over a staged multi-file events drop.
+    KMV merge associativity makes the final sketch identical to the
     batch-built one, so the estimates hash-match the batch oracle —
     sketch algebra, streaming upsert, and exactly-once replay
     guarded, all checked by one SQL string."""
     from stream_processing_system_spark.operators.sketch_kmv import kmv_estimates
 
-    input_dir, ckpt, run = _scratch("kmv")
-    state_dir = os.path.join(os.path.dirname(input_dir), "state")
     events = load_table(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"), F.col("user_id").alias("member")
     )
-    events.repartition(4).write.mode("overwrite").parquet(input_dir)
-    with _state_partitions(spark):
+    with jobs.scratch_dir("kmv") as base:
+        input_dir = os.path.join(base, "in")
+        events.repartition(4).write.mode("overwrite").parquet(input_dir)
         sketch = jobs.stream_kmv_sketches(
-            spark, input_dir, ckpt, state_dir, name=f"kmv_{run}", k=256
+            spark, input_dir, None, os.path.join(base, "state"), k=256
         )
-    out = (
-        kmv_estimates(sketch, "g", k=256)
-        .select(F.col("g").alias("event_type"), "est_distinct")
-        .orderBy("event_type")
-        .localCheckpoint()
-    )
-    _cleanup(input_dir)
-    return out
+        return (
+            kmv_estimates(sketch, "g", k=256)
+            .select(F.col("g").alias("event_type"), "est_distinct")
+            .orderBy("event_type")
+            .localCheckpoint()
+        )
 
 
 #: State-operator metrics from the most recent stream_soak_lineitem_state
@@ -769,87 +535,99 @@ def stream_soak_lineitem_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal 2x the batch lineitem aggregate. A state-store bug
     (lost key, double-counted row, bad merge) breaks the hash.
 
-    The drained per-key table (1.2M rows at sf0.1) goes through a
-    parquet sink, NOT the memory sink — at real scale the state drain
-    must never materialize on the driver."""
+    The replicated multi-file drop is staged (its 8-file layout is
+    part of the soak), and the drained per-key table (1.2M rows at
+    sf0.1) goes through a parquet sink, NOT the memory sink — at real
+    scale the state drain must never materialize on the driver."""
     global last_soak_state_metrics
-    input_dir, ckpt, run = _scratch("soak")
-    out_dir = os.path.join(os.path.dirname(input_dir), "out")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        _cents("l_extendedprice").alias("cents"),
     )
     two = li.withColumn("replica", F.lit(0)).unionByName(
         li.withColumn("replica", F.lit(1))
     )
-    two.repartition(8).write.mode("overwrite").parquet(input_dir)
-
-    stream = spark.readStream.schema(
-        "l_orderkey long, l_linenumber int, l_returnflag string, "
-        "cents long, replica int"
-    ).parquet(input_dir)
-    per_key = stream.groupBy(
-        "replica", "l_orderkey", "l_linenumber", "l_returnflag"
-    ).agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents"))
-
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, rocksdb)
-    def _sink(batch_df: DataFrame, _bid: int) -> None:
-        # update-mode emissions append executor-side; at real scale
-        # this is the upsert-into-serving-store slot (a key may
-        # re-emit across batches — MERGE there; one availableNow
-        # batch here, so append is exact)
-        batch_df.write.mode("append").parquet(out_dir)
+    with jobs.scratch_dir("soak") as base:
+        input_dir, out_dir = os.path.join(base, "in"), os.path.join(base, "out")
+        two.repartition(8).write.mode("overwrite").parquet(input_dir)
+        stream = spark.readStream.schema(
+            "l_orderkey long, l_linenumber int, l_returnflag string, "
+            "cents long, replica int"
+        ).parquet(input_dir)
+        per_key = stream.groupBy(
+            "replica", "l_orderkey", "l_linenumber", "l_returnflag"
+        ).agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents"))
 
-    with _state_partitions(spark):
+        def _sink(batch_df: DataFrame, _bid: int) -> None:
+            # update-mode emissions append executor-side; at real scale
+            # this is the upsert-into-serving-store slot (a key may
+            # re-emit across batches — MERGE there; one availableNow
+            # batch here, so append is exact)
+            batch_df.write.mode("append").parquet(out_dir)
+
+        prev = spark.conf.get(provider_key, None)
+        spark.conf.set(provider_key, rocksdb)
         try:
-            q = (
-                per_key.writeStream.outputMode("update")
-                .foreachBatch(_sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            prog = q.lastProgress or {}
+            prog = jobs.drain_foreach_batch(per_key, _sink)
         finally:
             if prev is None:
                 spark.conf.unset(provider_key)
             else:
                 spark.conf.set(provider_key, prev)
-    ops = (prog.get("stateOperators") or [{}])[0]
-    custom = ops.get("customMetrics") or {}
-    last_soak_state_metrics = {
-        "numRowsTotal": ops.get("numRowsTotal"),
-        "numRowsUpdated": ops.get("numRowsUpdated"),
-        "stateMemory": ops.get("memoryUsedBytes"),
-        # rocksdb* custom metrics only appear when the RocksDB
-        # provider actually backed the store — proof the forced
-        # provider took effect, not just that the conf was set
-        "rocksdb": any(k.startswith("rocksdb") for k in custom),
-    }
-    drained = spark.read.parquet(out_dir)
-    out = (
-        drained.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("n").alias("n_rows"),
-            F.sum("cents").alias("total_cents"),
+        ops = (prog.get("stateOperators") or [{}])[0]
+        custom = ops.get("customMetrics") or {}
+        last_soak_state_metrics = {
+            "numRowsTotal": ops.get("numRowsTotal"),
+            "numRowsUpdated": ops.get("numRowsUpdated"),
+            "stateMemory": ops.get("memoryUsedBytes"),
+            # rocksdb* custom metrics only appear when the RocksDB
+            # provider actually backed the store — proof the forced
+            # provider took effect, not just that the conf was set
+            "rocksdb": any(k.startswith("rocksdb") for k in custom),
+        }
+        return (
+            spark.read.parquet(out_dir)
+            .groupBy("l_returnflag")
+            .agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("n").alias("n_rows"),
+                F.sum("cents").alias("total_cents"),
+            )
+            .orderBy("l_returnflag")
+            .localCheckpoint()
         )
-        .orderBy("l_returnflag")
-        .localCheckpoint()
-    )
-    _cleanup(input_dir)
-    return out
+
+
+def _daily_state(
+    spark: SparkSession, sf_dir: str, *aggs: Column, valued: bool = True
+) -> DataFrame:
+    """Per-(event_type, day) streaming aggregate over the events
+    stream (rows with a value only, unless `valued` is False), drained
+    and localCheckpointed. Sums of cents and counts are mergeable
+    monoids, so any micro-batch interleaving drains to the identical
+    snapshot. The day key streams as an ISO STRING so the snapshot
+    groups stably; the batch tails sort on it (ISO dates sort
+    lexicographically = chronologically). The localCheckpoint also
+    lets a tail self-join the snapshot: re-referencing the same
+    drained plan yields conflicting attribute ids."""
+    events = load_table(spark, sf_dir, "events", streaming=True)
+    if valued:
+        events = events.where(F.col("value").isNotNull())
+    day = F.col("ts").cast("date").cast("string").alias("day")
+    state = events.groupBy("event_type", day).agg(*aggs)
+    return jobs.drain(state).localCheckpoint(eager=True)
+
+
+def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, cent): per-day value sums in cents."""
+    return _daily_state(spark, sf_dir, F.sum(_cents()).alias("cent"))
 
 
 def stream_sax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -865,54 +643,19 @@ def stream_sax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark on ts."""
     from stream_processing_system_spark.plans.analytics import sax_word_from_daily
 
-    input_dir, ckpt, run = _scratch("sax")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("ts", "event_type", "value")
+    state = _daily_state(
+        spark, sf_dir, F.sum(_cents()).alias("s"), F.count(F.lit(1)).alias("nd")
     )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    state = (
-        stream.select(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-            centi.alias("v"),
+    daily = state.select(
+        "event_type",
+        "day",
+        F.floor(
+            (F.col("s") * F.lit(10000)).cast("double")
+            / F.col("nd").cast("double")
+            + F.lit(0.5)
         )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("nd"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sax_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    # localCheckpoint the drained snapshot (<= types x days rows): the
-    # SAX tail self-joins the daily frame, and re-referencing the same
-    # MemoryPlan yields conflicting attribute ids.
-    daily = (
-        spark.table(f"sax_{run}")
-        .select(
-            "event_type",
-            "day",
-            F.floor(
-                (F.col("s") * F.lit(10000)).cast("double")
-                / F.col("nd").cast("double")
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("dm"),
-        )
-        .localCheckpoint(eager=True)
+        .cast("long")
+        .alias("dm"),
     )
     return sax_word_from_daily(daily)
 
@@ -920,154 +663,46 @@ def stream_sax_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters forecasts with the daily-totals state maintained
     by an availableNow streaming aggregation — the streaming twin of
-    `analytics.events_holt_winters` (same oracle). Per-(type, day)
-    centi-value sums are a mergeable monoid (any micro-batch
-    interleaving drains to the same snapshot); the sequential
-    smoothing recursion then runs as the shared batch fold over the
-    drained state. The day key streams as a STRING so the memory-sink
-    snapshot groups stably; the fold sorts on it (ISO dates sort
-    lexicographically = chronologically)."""
+    `analytics.events_holt_winters` (same oracle). The sequential
+    smoothing recursion runs as the shared batch fold over the
+    drained per-(type, day) cent sums (`_daily_state`)."""
     from stream_processing_system_spark.plans.analytics import (
         holt_winters_from_daily,
     )
 
-    input_dir, ckpt, run = _scratch("hw")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    state = (
-        stream.select(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-            centi.alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"hw_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    daily = (
-        spark.table(f"hw_{run}")
-        .select("event_type", "day", "cent")
-        .localCheckpoint(eager=True)
-    )
-    return holt_winters_from_daily(daily)
+    return holt_winters_from_daily(_daily_cents(spark, sf_dir))
 
 
 def stream_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kalman local-level estimates with the daily-count state
     maintained by an availableNow streaming aggregation — the
     streaming twin of `analytics.events_kalman_level` (same oracle).
-    Per-(type, day) counts are a mergeable monoid (any micro-batch
-    interleaving drains to the same snapshot); the sequential filter
-    recursion then runs as the shared batch fold over the drained
-    state. The day key streams as a STRING so the memory-sink
-    snapshot groups stably; the fold sorts on it (ISO dates sort
-    lexicographically = chronologically)."""
+    The sequential filter recursion runs as the shared batch fold
+    over the drained per-(type, day) counts of ALL events."""
     from stream_processing_system_spark.plans.analytics import kalman_from_daily
 
-    input_dir, ckpt, run = _scratch("kal")
-    events = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema("ts timestamp, event_type string").parquet(
-        input_dir
-    )
-    state = (
-        stream.select(
-            "event_type", F.col("ts").cast("date").cast("string").alias("day")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"kal_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    daily = (
-        spark.table(f"kal_{run}")
-        .select("event_type", "day", "c")
-        .localCheckpoint(eager=True)
-    )
+    daily = _daily_state(spark, sf_dir, F.count(F.lit(1)).alias("c"), valued=False)
     return kalman_from_daily(daily)
 
 
 def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum drawdown with the daily-totals state maintained by an
     availableNow streaming aggregation — the streaming twin of
-    `analytics.events_max_drawdown` (same oracle). Per-(type, day)
-    centi sums are a mergeable monoid; the peak-segmentation tail
-    then runs as the shared batch plan over the drained state (day
-    streams as an ISO string, which sorts chronologically)."""
+    `analytics.events_max_drawdown` (same oracle). The
+    peak-segmentation tail runs as the shared batch plan over the
+    drained per-(type, day) cent sums."""
     from stream_processing_system_spark.plans.analytics import (
         max_drawdown_from_daily,
     )
 
-    input_dir, ckpt, run = _scratch("mdd")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    state = (
-        stream.select(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-            centi.alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"mdd_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    daily = (
-        spark.table(f"mdd_{run}")
-        .select("event_type", "day", "cent")
-        .localCheckpoint(eager=True)
-    )
-    return max_drawdown_from_daily(daily)
+    return max_drawdown_from_daily(_daily_cents(spark, sf_dir))
 
 
 def stream_spout_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q1_wordcount executed through the `crane_spout` custom
     STREAMING DataSource (S7, `Apps/WordCountSpout.go:18-44`):
-    documents.text is re-laid as a text drop directory, the spout's
+    documents.text is re-laid as a text drop directory (staged: the
+    spout's per-file line reader is the path under test), the spout's
     offset-tracked SimpleDataSourceStreamReader tails it (offset =
     files consumed, replay-safe), and the drained availableNow run
     feeds the same wordcount plan. (Spark's Python microbatch stream
@@ -1080,72 +715,34 @@ def stream_spout_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a pytest-only one."""
     from stream_processing_system_spark.plans.reference import wordcount
     from stream_processing_system_spark.sources import spout_source
-    from stream_processing_system_spark.streaming.jobs import _drain_to_table
 
     spout_source.register(spark)
-    input_dir, ckpt, run = _scratch("spoutwc")
     docs = load_table(spark, sf_dir, "documents").select(F.col("text"))
-    docs.write.mode("overwrite").text(input_dir)
-    lines = (
-        spark.readStream.format("crane_spout")
-        .option("path", input_dir)
-        .load()
-        .select(F.col("line"))
-    )
-    with _state_partitions(spark):
-        result = _drain_to_table(wordcount(lines), f"spoutwc_{run}", ckpt)
-    _cleanup(input_dir)
-    return result.select("word", "cnt")
+    with jobs.scratch_dir("spoutwc") as input_dir:
+        docs.write.mode("overwrite").text(input_dir)
+        lines = (
+            spark.readStream.format("crane_spout")
+            .option("path", input_dir)
+            .load()
+            .select(F.col("line"))
+        )
+        return jobs.drain(wordcount(lines)).select("word", "cnt")
 
 
 def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page–Hinkley drift detection with the daily-totals state
     maintained by an availableNow streaming aggregation — the
     streaming twin of `analytics.events_page_hinkley` (same oracle).
-    The per-(type, day) centi sums are a mergeable monoid, so the
-    streaming state is exactly the `_daily_whole_units` grid; the
-    running-mean/cumsum/running-min PH tail then runs as the shared
-    batch plan over the drained state (day streams as an ISO string,
-    which sorts chronologically — the tail only orders by it)."""
+    The per-(type, day) cent sums are exactly the `_daily_whole_units`
+    grid; the running-mean/cumsum/running-min PH tail runs as the
+    shared batch plan over the drained state (the tail only orders by
+    the ISO-string day)."""
     from stream_processing_system_spark.plans.analytics import (
         page_hinkley_from_daily,
     )
 
-    input_dir, ckpt, run = _scratch("sph")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    state = (
-        stream.select(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-            centi.alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sph_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    daily = (
-        spark.table(f"sph_{run}")
-        .select("event_type", "day", F.expr("cent div 100").alias("x"))
-        .localCheckpoint(eager=True)
+    daily = _daily_cents(spark, sf_dir).select(
+        "event_type", "day", F.expr("cent div 100").alias("x")
     )
     return page_hinkley_from_daily(daily)
 
@@ -1153,321 +750,92 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AR(2) Yule–Walker fit with the daily-totals state maintained
     by an availableNow streaming aggregation — the streaming twin of
-    `analytics.events_ar2_yule_walker` (same oracle). Per-(type,
-    day) centi sums are a mergeable monoid; the lead-window
+    `analytics.events_ar2_yule_walker` (same oracle). The lead-window
     autocovariance tail runs as the shared batch plan over the
-    drained state (ISO-string days order chronologically, and
-    max_by(x, day) picks the same last observations)."""
+    drained per-(type, day) cent sums (ISO-string days order
+    chronologically, and max_by(x, day) picks the same last
+    observations)."""
     from stream_processing_system_spark.plans.analytics import (
         ar2_yule_walker_from_daily,
     )
 
-    input_dir, ckpt, run = _scratch("sar2")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    centi = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    state = (
-        stream.select(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-            centi.alias("v"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("v").alias("cent"))
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sar2_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    daily = (
-        spark.table(f"sar2_{run}")
-        .select("event_type", "day", F.expr("cent div 100").alias("x"))
-        .localCheckpoint(eager=True)
+    daily = _daily_cents(spark, sf_dir).select(
+        "event_type", "day", F.expr("cent div 100").alias("x")
     )
     return ar2_yule_walker_from_daily(daily)
 
 
-def stream_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Cramér–von Mises drift test with the
-    (type, cent-value) half-split counts maintained by an
-    availableNow streaming aggregation — the streaming twin of
-    `analytics.events_cvm_drift` (same oracle). The per-cell
-    (ca, cb) counts are a mergeable monoid, so the streaming state
-    IS the bounded cent-domain cell frame; the cumulative-ECDF gap²
-    tail then runs as the shared batch plan over the drained state."""
-    from stream_processing_system_spark.plans.analytics import (
-        cvm_from_cells,
-    )
-
-    input_dir, ckpt, run = _scratch("scvm")
+def _half_split_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, cent-value) cells with their first-half (ca)
+    and second-half (cb) counts, maintained by an availableNow
+    streaming aggregation, drained and localCheckpointed. The
+    per-cell counts are a mergeable monoid, so the streaming state IS
+    the bounded cent-domain cell frame that the drift family's batch
+    tails (KS / CvM / AD / Cliff's δ / Mood's median) read."""
     # ts IS NOT NULL mirrors the batch plan and the oracle exactly:
     # without it, SUM's NULL-skip of the half indicator would drop
     # NULL-ts rows the oracle's CASE WHEN counts into ca (ADVICE r7)
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
     half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
     state = (
-        stream.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            half.alias("h"),
-        )
+        load_table(spark, sf_dir, "events", streaming=True)
+        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
+        .select("event_type", _cents().alias("v"), half.alias("h"))
         .groupBy("event_type", "v")
         .agg(
             F.sum(F.lit(1) - F.col("h")).alias("ca"),
             F.sum("h").alias("cb"),
         )
     )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"scvm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cells = spark.table(f"scvm_{run}").localCheckpoint(eager=True)
-    return cvm_from_cells(cells, query="stream_cvm_drift")
+    return jobs.drain(state).localCheckpoint(eager=True)
+
+
+def stream_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample Cramér–von Mises drift test over the streamed
+    half-split cells (`_half_split_cells`) — the streaming twin of
+    `analytics.events_cvm_drift` (same oracle); the cumulative-ECDF
+    gap² tail runs as the shared batch plan over the drained state."""
+    from stream_processing_system_spark.plans.analytics import cvm_from_cells
+
+    return cvm_from_cells(_half_split_cells(spark, sf_dir), query="stream_cvm_drift")
 
 
 def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov drift test with the
-    (type, cent-value) half-split counts maintained by an
-    availableNow streaming aggregation — the streaming twin of
-    `analytics.events_ks_test` (same oracle), completing the
-    streaming drift pair with `stream_cvm_drift`: the per-cell
-    (ca, cb) counts are a mergeable monoid, so the streaming state
-    IS the bounded cent-domain cell frame, and the max-ECDF-gap tail
-    runs as the shared batch plan over the drained state."""
-    from stream_processing_system_spark.plans.analytics import (
-        ks_from_cells,
-    )
+    """Two-sample Kolmogorov–Smirnov drift test over the streamed
+    half-split cells — the streaming twin of `analytics.events_ks_test`
+    (same oracle); the max-ECDF-gap tail runs as the shared batch plan
+    over the drained state."""
+    from stream_processing_system_spark.plans.analytics import ks_from_cells
 
-    input_dir, ckpt, run = _scratch("sks")
-    # ts IS NOT NULL mirrors the batch plan and the oracle exactly
-    # (the ADVICE-r7 NULL-ts drift-split class)
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
-    state = (
-        stream.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            half.alias("h"),
-        )
-        .groupBy("event_type", "v")
-        .agg(
-            F.sum(F.lit(1) - F.col("h")).alias("ca"),
-            F.sum("h").alias("cb"),
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sks_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cells = spark.table(f"sks_{run}").localCheckpoint(eager=True)
-    return ks_from_cells(cells)
+    return ks_from_cells(_half_split_cells(spark, sf_dir))
 
 
 def stream_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tail-weighted two-sample drift with the (type, cent-value)
-    half-split counts maintained by an availableNow streaming
-    aggregation — the streaming twin of
-    `analytics.events_anderson_darling` (same oracle). With this the
-    ENTIRE two-sample drift family (KS / CvM / AD) runs in both
-    runtimes over one shared mergeable cell-monoid state: the
-    streaming aggregation IS the bounded cent-domain cell frame, the
-    statistic tails are the shared batch plans over the drained
-    state."""
-    from stream_processing_system_spark.plans.analytics import (
-        ad_from_cells,
-    )
+    """Tail-weighted two-sample drift over the streamed half-split
+    cells — the streaming twin of `analytics.events_anderson_darling`
+    (same oracle). With this the ENTIRE two-sample drift family
+    (KS / CvM / AD) runs in both runtimes over one shared mergeable
+    cell-monoid state."""
+    from stream_processing_system_spark.plans.analytics import ad_from_cells
 
-    input_dir, ckpt, run = _scratch("sad")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
-    state = (
-        stream.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            half.alias("h"),
-        )
-        .groupBy("event_type", "v")
-        .agg(
-            F.sum(F.lit(1) - F.col("h")).alias("ca"),
-            F.sum("h").alias("cb"),
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"sad_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cells = spark.table(f"sad_{run}").localCheckpoint(eager=True)
-    return ad_from_cells(cells)
+    return ad_from_cells(_half_split_cells(spark, sf_dir))
 
 
 def stream_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cliff's-delta effect size with the (type, cent-value)
-    half-split counts maintained by an availableNow streaming
-    aggregation — the streaming twin of
-    `analytics.events_cliffs_delta` (same oracle). Completes the
-    drift family's streaming story: the THREE alarm statistics
-    (KS / CvM / AD) and now the EFFECT SIZE a monitor reads after
-    the alarm all run in both runtimes over the SAME mergeable
-    cell-monoid state — one streaming aggregation feeds four
-    statistic tails, which is exactly how a production monitor
-    would deploy them (one state store, many readouts)."""
-    from stream_processing_system_spark.plans.analytics import (
-        cliffs_from_cells,
-    )
+    """Cliff's-delta effect size over the streamed half-split cells —
+    the streaming twin of `analytics.events_cliffs_delta` (same
+    oracle). The three alarm statistics (KS / CvM / AD) and the
+    EFFECT SIZE a monitor reads after the alarm all run over the SAME
+    mergeable cell-monoid state — one state store, many readouts,
+    which is how a production monitor would deploy them."""
+    from stream_processing_system_spark.plans.analytics import cliffs_from_cells
 
-    input_dir, ckpt, run = _scratch("scd2")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
-    state = (
-        stream.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            half.alias("h"),
-        )
-        .groupBy("event_type", "v")
-        .agg(
-            F.sum(F.lit(1) - F.col("h")).alias("ca"),
-            F.sum("h").alias("cb"),
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"scd2_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cells = spark.table(f"scd2_{run}").localCheckpoint(eager=True)
-    return cliffs_from_cells(cells)
+    return cliffs_from_cells(_half_split_cells(spark, sf_dir))
 
 
 def stream_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's median test with the (type, cent-value) half-split
-    counts maintained by an availableNow streaming aggregation —
-    the streaming twin of `analytics.events_mood_median` (same
-    oracle). FIVE statistic tails (KS / CvM / AD / Cliff's δ /
-    Mood's median χ²) now read the SAME mergeable cell-monoid
-    state: one streaming aggregation, five readouts — the
-    production-monitor deployment shape, and the reason the family
-    factored its tails out of the batch plans."""
-    from stream_processing_system_spark.plans.analytics import (
-        mood_from_cells,
-    )
+    """Mood's median test over the streamed half-split cells — the
+    streaming twin of `analytics.events_mood_median` (same oracle):
+    the fifth statistic tail over the one shared cell state."""
+    from stream_processing_system_spark.plans.analytics import mood_from_cells
 
-    input_dir, ckpt, run = _scratch("smm")
-    events = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select("ts", "event_type", "value")
-    )
-    events.write.mode("overwrite").parquet(input_dir)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(input_dir)
-    half = (F.col("ts") >= F.lit("2024-01-16")).cast("int")
-    state = (
-        stream.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("v"),
-            half.alias("h"),
-        )
-        .groupBy("event_type", "v")
-        .agg(
-            F.sum(F.lit(1) - F.col("h")).alias("ca"),
-            F.sum("h").alias("cb"),
-        )
-    )
-    with _state_partitions(spark):
-        q = (
-            state.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(f"smm_{run}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _cleanup(input_dir)
-    cells = spark.table(f"smm_{run}").localCheckpoint(eager=True)
-    return mood_from_cells(cells)
+    return mood_from_cells(_half_split_cells(spark, sf_dir))

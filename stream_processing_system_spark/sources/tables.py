@@ -48,9 +48,19 @@ def table_path(sf_dir: str, name: str) -> str:
 _SCHEMA_CACHE: dict[str, object] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, streaming: bool = False
+) -> DataFrame:
     """Load one catalog table. Columnar parquet scan; Catalyst prunes
-    columns and pushes filters into the scan automatically."""
+    columns and pushes filters into the scan automatically.
+
+    `streaming=True` returns the same table as an unbounded file
+    stream over the catalog parquet itself, with the batch schema (an
+    availableNow drain reads it once, as one micro-batch). A catalog
+    table stored as a single file streams from its directory with a
+    `pathGlobFilter` on the file name: the file stream source needs a
+    directory. The source only lists and reads; it never moves or
+    deletes the catalog file."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Naive parquet timestamps (isAdjustedToUTC=false) must read as
@@ -59,29 +69,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # cast, and DuckDB's epoch() oracle reads the same stored micros.
     # With session tz UTC the stored value IS the epoch either way.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    path = table_path(sf_dir, name)
-
-    def _read(p: str) -> DataFrame:
-        cached = _SCHEMA_CACHE.get(p)
-        if cached is not None:
-            return spark.read.schema(cached).parquet(p)
-        df = spark.read.parquet(p)
-        _SCHEMA_CACHE[p] = df.schema
-        return df
-
     if name == "events":
         # events.parquet has stored TIMESTAMP(NANOS) in some driver
         # generations, which vanilla Spark rejects
-        # (PARQUET_TYPE_ILLEGAL). Read nanos as long, then convert to
-        # a real timestamp at microsecond precision using integer
-        # division (a double division would lose precision at ~1.7e18
-        # nanos).
+        # (PARQUET_TYPE_ILLEGAL): read nanos as long (converted below).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return _read(path)
+    path = table_path(sf_dir, name)
+    schema = _SCHEMA_CACHE.get(path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = _SCHEMA_CACHE[path] = df.schema
+    elif not streaming:
+        df = spark.read.schema(schema).parquet(path)
+    if streaming:
+        reader = spark.readStream.schema(schema)
+        if os.path.isfile(path):
+            reader = reader.option("pathGlobFilter", os.path.basename(path))
+            path = os.path.dirname(path)
+        df = reader.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # nanos -> a real timestamp at microsecond precision, by
+        # integer division (a double division would lose precision
+        # at ~1.7e18 nanos)
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
