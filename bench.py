@@ -26,22 +26,21 @@ windows): min-of-2 per query, an ADAPTIVE third sample whenever the
 two samples disagree by >1.3x, and a recurring q1_wordcount
 calibration probe whose median/min pair is recorded in both output
 records. Round-10: the run ACTS on its own probe — when median/min
-> 1.3 (a hot window), queries that regressed >1.5x vs the last
-committed record get one extra sample before the record is written,
+> 1.3 (a hot window), queries that regressed >1.5x vs the baseline
+record (below) get one extra sample before the record is written,
 and the record is stamped `hot_window` either way (VERDICT r9
 item 4: a hot 32-core window became round 9's comparison baseline).
 
-`--changed-since` re-measures only queries whose normalized
-optimized-plan fingerprint differs from the last committed
-BENCH_DETAIL record (plus the 20 slowest prior rows and the
-flagship anchors); everything else carries its prior timing forward,
-listed under `carried` in the detail record. Full runs store the
-fingerprints (`plan_hashes`) to seed the next incremental run —
-AFTER the timed loop (round 9 hashed up front, which executed every
-trainer's build phase as an unintended whole-surface warm-up;
-VERDICT r9 item 9). Queries whose build executes Spark jobs are
-classified in `build_executes` and fingerprint by source text, so
-the incremental pass never runs their build either."""
+Every run measures every query it names: a full run (no arguments)
+times the whole surface, a named run (`python bench.py q1 q2`) times
+just those queries and writes no record. A full run stamps its record
+with `cpus` and `sf`, and its regression baseline (the hot-window
+resample) is the highest-numbered committed record with the same
+`cpus` and `sf`; an unstamped record is never a baseline, so one
+comparison never mixes core counts or scales. After the timed loop a
+full run also stores each query's normalized optimized-plan
+fingerprint (`plan_hashes`), the evidence that a refactor kept a
+plan byte-identical."""
 
 from __future__ import annotations
 
@@ -51,6 +50,7 @@ import sys
 import time
 
 import __spark_entry__ as contract
+from perfbench.common import total_jobs
 from stream_processing_system_spark.session import get_spark
 
 #: Headline set: reference parity + the heaviest analytics + one of
@@ -249,109 +249,62 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _n_jobs(spark) -> int:
-    """Total Spark jobs submitted so far (Java SparkStatusTracker) —
-    the job counter `_plan_hash` uses to DETECT queries whose
-    DataFrame build executes work (trainer collects, fixpoint loops,
-    streaming drains)."""
-    t = spark._jsparkSession.sparkContext().statusTracker()
-    return len(t.getJobIdsForGroup(None))
+def _plan_hash(fn, name: str, spark, sf_dir: str) -> str | None:
+    """Stable fingerprint of what a query executes: its optimized
+    logical plan string with session-scoped noise normalized out
+    (expression ids `#123`, scratch paths, object addresses).
 
-
-_PKG_DIGEST: str | None = None
-
-
-def _pkg_digest() -> str:
-    """Digest of every package source file. Folded into source-text
-    fingerprints so a build-executing query (whose wrapper source
-    rarely changes) is re-measured whenever ANY package module
-    changed — the wrapper's own source can't see edits to the
-    operator functions it calls."""
-    global _PKG_DIGEST
-    if _PKG_DIGEST is None:
-        import hashlib
-
-        h = hashlib.sha256()
-        root = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "stream_processing_system_spark",
-        )
-        for dirpath, _dirs, files in sorted(os.walk(root)):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    with open(os.path.join(dirpath, f), "rb") as fh:
-                        h.update(fh.read())
-        _PKG_DIGEST = h.hexdigest()[:16]
-    return _PKG_DIGEST
-
-
-def _src_hash(fn) -> str:
-    import hashlib
-    import inspect
-
-    src = inspect.getsource(fn) + _pkg_digest()
-    return "src:" + hashlib.sha256(src.encode()).hexdigest()[:16]
-
-
-def _plan_hash(fn, name: str, spark, sf_dir: str, skip_build: bool = False):
-    """Stable fingerprint of what a query WOULD execute, for the
-    `--changed-since` mode: the optimized logical plan string with
-    session-scoped noise normalized out (expression ids `#123`,
-    scratch paths, object addresses). Returns (hash, build_ran_jobs).
-
-    Queries whose DataFrame BUILD executes Spark jobs (streaming
-    twins drain their stream; trainers collect codebooks; fixpoint
-    loops run) fingerprint by source text instead — any edit to
-    their function re-measures them — and are RECORDED in the detail
-    file (`build_executes`) so the next run can skip their build
-    entirely (`skip_build=True`): round-9's pre-timing fingerprint
-    pass executed every trainer's build phase as an unintended
-    whole-surface warm-up (VERDICT r9 item 9); now no fingerprint
-    job runs before the timed loop at all (full runs hash AFTER
-    timing behind a clearCache), and incremental runs never build
-    the queries classified as build-executing."""
+    None when the query has no build-free plan to fingerprint: a
+    `stream_*` twin (its build drains the stream), a query whose
+    DataFrame build submits Spark jobs on every build (trainer
+    collects, fixpoint loops), or a build that raises. Jobs are
+    counted in every job group (`total_jobs`)."""
     import hashlib
     import re
 
     mod = getattr(fn, "__module__", "") or ""
-    if skip_build or name.startswith("stream_") or "streaming" in mod:
-        return _src_hash(fn), False
+    if name.startswith("stream_") or "streaming" in mod:
+        return None
     try:
-        j0 = _n_jobs(spark)
+        j0 = total_jobs(spark)
         df = fn(spark, sf_dir)
-        if _n_jobs(spark) > j0:
+        if total_jobs(spark) > j0:
             # jobs ran — but a session's FIRST touch of a parquet
             # table runs a one-off schema/footer job that is not the
             # query's doing. Rebuild once: only genuinely
             # build-executing queries (trainer collects, fixpoint
             # loops) run jobs on EVERY build.
-            j1 = _n_jobs(spark)
+            j1 = total_jobs(spark)
             df = fn(spark, sf_dir)
-            if _n_jobs(spark) > j1:
-                return _src_hash(fn), True
+            if total_jobs(spark) > j1:
+                return None
         p = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:
-        return _src_hash(fn), False
+        return None
     p = re.sub(r"#\d+", "#", p)
     p = re.sub(r"\b([A-Za-z]+)_\d+\b", r"\1_", p)  # lambda var counters
     p = re.sub(r"/tmp/\S+", "<tmp>", p)
     p = re.sub(r"@[0-9a-f]{6,}", "@", p)
-    return "plan:" + hashlib.sha256(p.encode()).hexdigest()[:16], False
+    return "plan:" + hashlib.sha256(p.encode()).hexdigest()[:16]
 
 
-def _latest_detail(repo_root: str):
-    """Most recent committed BENCH_DETAIL_r{N}.json, or None."""
+def _latest_detail(repo_root: str, cpus: int, sf):
+    """Highest-numbered committed BENCH_DETAIL_r{N}.json taken at the
+    same `cpus` and `sf`, or None. A record without both stamps is
+    never a baseline."""
     import re
 
-    best, best_n = None, -1
-    for f in os.listdir(repo_root):
-        m = re.match(r"BENCH_DETAIL_r(\d+)\.json$", f)
-        if m and int(m.group(1)) > best_n:
-            best_n, best = int(m.group(1)), f
-    if best is None:
-        return None
-    with open(os.path.join(repo_root, best)) as fh:
-        return json.load(fh)
+    found = sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(repo_root)
+        if (m := re.match(r"BENCH_DETAIL_r(\d+)\.json$", f))
+    )
+    for _n, f in reversed(found):
+        with open(os.path.join(repo_root, f)) as fh:
+            rec = json.load(fh)
+        if rec.get("cpus") == cpus and rec.get("sf") == sf:
+            return rec
+    return None
 
 
 def _round_number(repo_root: str) -> int:
@@ -386,12 +339,14 @@ def _write_detail(repo_root: str, payload: dict) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+    queries = contract.queries()
+    arg_names = sys.argv[1:]
+    unknown = [n for n in arg_names if n not in queries]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
     spark = get_spark(app_name="bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    queries = contract.queries()
 
-    changed_since = "--changed-since" in sys.argv[1:]
-    arg_names = [a for a in sys.argv[1:] if not a.startswith("--")]
     # Default: every registered query — HEADLINE first (the
     # round-2-comparable subset), then everything else in
     # registration order (round-3 ask: no unbenched queries).
@@ -400,53 +355,15 @@ def main() -> None:
     )
 
     repo_root = os.path.dirname(os.path.abspath(__file__))
-    plan_hashes: dict[str, str] = {}
-    build_executes: set[str] = set()
-    carried: dict[str, float] = {}
-    prev = _latest_detail(repo_root) or {}
-    prev_timings_all = prev.get("queries", {})
-    if changed_since and not arg_names:
-        # Re-measure only queries whose (normalized) optimized plan
-        # changed since the last committed detail record, plus the
-        # 20 slowest prior rows (the regression-sensitive tail) and
-        # the flagship anchors; everything else carries its prior
-        # timing forward, marked in the detail record. Full signal
-        # at roughly half the wall (VERDICT r8 item 8). Queries the
-        # last record classified as build-executing are fingerprinted
-        # by source WITHOUT building them — this pass runs zero
-        # Spark jobs for them (VERDICT r9 item 9).
-        prev_hashes = prev.get("plan_hashes", {})
-        prev_build_exec = set(prev.get("build_executes", []))
-        for n in names:
-            plan_hashes[n], ran = _plan_hash(
-                queries[n], n, spark, sf_dir,
-                skip_build=n in prev_build_exec,
-            )
-            if ran or n in prev_build_exec:
-                build_executes.add(n)
-        slow20 = set(
-            sorted(prev_timings_all, key=prev_timings_all.get, reverse=True)[:20]
-        )
-        anchors = {
-            "q1_wordcount", "q2_top_users", "q3_host_report",
-            "pricing_summary", "ivf_index_topk", "pq_topk",
-        }
-        remeasure = {
-            n
-            for n in names
-            if n not in prev_timings_all
-            or prev_hashes.get(n) != plan_hashes[n]
-            or n in slow20
-            or n in anchors
-        }
-        carried = {
-            n: prev_timings_all[n] for n in names if n not in remeasure
-        }
-        names = [n for n in names if n in remeasure]
-    # Full-surface runs fingerprint AFTER the timed loop (see below):
-    # round-9 hashed up front, which executed every trainer's build
-    # phase before timing — an unintended whole-surface warm-up
-    # (VERDICT r9 item 9). Nothing runs before this warm-up now.
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    prev_timings_all = (_latest_detail(repo_root, cpus, sf_val) or {}).get(
+        "queries", {}
+    )
+    # Nothing runs before this warm-up: plan fingerprints are taken
+    # AFTER the timed loop (round 9 hashed up front, which executed
+    # every trainer's build phase as an unintended whole-surface
+    # warm-up; VERDICT r9 item 9).
     force(queries["pricing_summary"](spark, sf_dir))  # warm-up
     # The persisted IVF index is built once per process (train +
     # assign + partitioned write — the vector-DB-load analogue);
@@ -491,7 +408,6 @@ def main() -> None:
         if best > 0.2 and max(a, b) > 1.3 * best:
             best = min(best, sample(name))
         timings[name] = round(best, 3)
-    n_measured = len(timings)
     calibration.append(round(sample("q1_wordcount"), 3))
     cal_sorted = sorted(calibration)
     cal_median = round(cal_sorted[len(cal_sorted) // 2], 3)
@@ -499,8 +415,8 @@ def main() -> None:
     # Act on the calibration probe (VERDICT r9 item 4): a median/min
     # ratio > 1.3 certifies a hot window — ambient contention, not
     # plan changes, inflated some samples. Re-sample once any query
-    # that regressed > 1.5x vs the last committed record and keep the
-    # min; stamp the record either way so a hot-window run can never
+    # that regressed > 1.5x vs the same-cpus, same-sf baseline record
+    # and keep the min; stamp the record either way so a hot-window run can never
     # silently become a round's comparison baseline.
     hot_window = cal_min > 0 and cal_median > 1.3 * cal_min
     resampled: list[str] = []
@@ -510,10 +426,7 @@ def main() -> None:
             if prev_t and timings[name] > 1.5 * prev_t:
                 timings[name] = round(min(timings[name], sample(name)), 3)
                 resampled.append(name)
-    timings.update(carried)
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     headline = set(HEADLINE)
     flagships = [
         "q1_wordcount", "q2_top_users", "q3_host_report",
@@ -522,23 +435,17 @@ def main() -> None:
     ]
     print(json.dumps({"queries": timings, "sf": sf_val}), flush=True)
     if not arg_names:  # full-surface run: persist the record
-        if not changed_since:
-            # fingerprint AFTER timing: clearCache() first restores
-            # fresh-session plan state (cached relations otherwise
-            # splice InMemoryRelation nodes into ~95 of 414 plans and
-            # spuriously "change" them for the next incremental run)
-            spark.catalog.clearCache()
-            for n in names:
-                plan_hashes[n], ran = _plan_hash(queries[n], n, spark, sf_dir)
-                if ran:
-                    build_executes.add(n)
+        # fingerprint AFTER timing: clearCache() first restores
+        # fresh-session plan state (cached relations otherwise splice
+        # InMemoryRelation nodes into ~95 of 414 plans)
+        spark.catalog.clearCache()
+        plan_hashes = {n: _plan_hash(queries[n], n, spark, sf_dir) for n in names}
         _write_detail(
-            os.path.dirname(os.path.abspath(__file__)),
+            repo_root,
             {
+                "cpus": cpus,
                 "sf": sf_val,
                 "n_queries": len(timings),
-                "n_measured": n_measured,
-                "carried": sorted(carried),
                 "ivf_index_build_sec": ivf_build,
                 "pq_codebook_build_sec": pq_build,
                 "calibration_q1_samples": calibration,
@@ -547,7 +454,6 @@ def main() -> None:
                 "hot_window": hot_window,
                 "hot_resampled": sorted(resampled),
                 "plan_hashes": plan_hashes,
-                "build_executes": sorted(build_executes),
                 "queries": timings,
             },
         )
@@ -558,7 +464,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "n_queries": len(timings),
-                "n_measured": n_measured,
+                "n_measured": len(timings),
                 "headline_sec": round(
                     sum(v for n, v in timings.items() if n in headline), 3
                 ),

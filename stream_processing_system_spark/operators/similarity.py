@@ -24,7 +24,6 @@ relationally.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -88,27 +87,6 @@ def lsh_signature(vec_col, planes: list[list[float]]):
     return out
 
 
-def lsh_signature_udf(planes: list[list[float]]):
-    """Vectorized twin of `lsh_signature`: one Arrow crossing and a
-    single (batch × dim) @ (dim × planes) matmul per batch, vs
-    n_planes interpreted HOF dot products per row. Sign agreement
-    with the expression form (and the SQL oracle) would only break
-    for |dot| < ~1e-13 — not observed at any SF; the differential
-    gate guards it."""
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
-    powers = (2 ** np.arange(mat.shape[1], dtype=np.int64)).astype(np.int64)
-
-    @pandas_udf("long")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        bits = (v @ mat) >= 0
-        return pd.Series(bits @ powers)
-
-    return _sig
-
-
 def lsh_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -157,23 +135,6 @@ def project_expr(vec_col, mat: list[list[float]]):
         lit = F.array(*[F.lit(float(x)) for x in row])
         coords.append(det_round(dot_product(vec_col, lit)))
     return F.array(*coords)
-
-
-def random_projection(
-    df: DataFrame,
-    out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 7,
-    out_col: str = "rp",
-) -> DataFrame:
-    """JL random projection dim→out_dim: the standard pre-ANN
-    shrink (store/scan 4× fewer floats; JL preserves pairwise
-    distances within ~1/sqrt(out_dim)). One codegen'd map stage, no
-    shuffle, no Python — at 100 TB this runs at scan speed."""
-    mat = projection_matrix(out_dim, dim, seed)
-    return df.select(F.col(id_col), project_expr(F.col(vec_col), mat).alias(out_col))
 
 
 def rp_topk(

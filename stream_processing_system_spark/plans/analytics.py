@@ -1405,12 +1405,14 @@ def orders_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     stats = row.select(F.explode(F.array(*entries)).alias("s")).select("s.*")
+    # left join: an all-NULL column has no NDV row (its values are
+    # filtered out above) and still keeps its profile row, NDV 0
     return (
-        stats.join(F.broadcast(nd), stats.col_name == nd._c)
+        stats.join(F.broadcast(nd), stats.col_name == nd._c, "left")
         .select(
             "col_name",
             "n_nulls",
-            F.col("_nd").alias("n_distinct"),
+            F.coalesce(F.col("_nd"), F.lit(0).cast("long")).alias("n_distinct"),
             "min_num",
             "max_num",
             "min_str",

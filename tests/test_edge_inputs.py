@@ -156,3 +156,23 @@ def test_range_frame_shrinks_over_calendar_gaps(spark):
         ).collect()
     }
     assert out == {0: 1, 1: 2, 2: 3, 20: 1, 21: 2}
+
+
+def test_table_profile_keeps_all_null_column(spark, sf_dir, tmp_path):
+    """An all-NULL column has no value to count distinct, so it has no
+    row in the NDV frame; its profile row must survive with NDV 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stream_processing_system_spark.plans.analytics import orders_table_profile
+
+    t = pq.read_table(f"{sf_dir}/orders.parquet")
+    i = t.schema.get_field_index("o_orderpriority")
+    t = t.set_column(i, "o_orderpriority", pa.nulls(t.num_rows, pa.string()))
+    pq.write_table(t, tmp_path / "orders.parquet")
+    rows = {r["col_name"]: r for r in orders_table_profile(spark, str(tmp_path)).collect()}
+    assert len(rows) == 6
+    prio = rows["o_orderpriority"]
+    assert prio["n_distinct"] == 0 and prio["n_nulls"] == t.num_rows
+    assert prio["min_str"] is None and prio["max_str"] is None
+    assert rows["o_orderstatus"]["n_distinct"] > 0

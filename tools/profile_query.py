@@ -1,8 +1,9 @@
 """Per-query profile: DataFrame BUILD wall (plan construction incl.
 any eager localCheckpoints / driver-side training collects), EXECUTE
-wall (noop sink), and the number of Spark jobs each phase submitted —
-the decomposition that tells whether a slow query is paying for
-driver round trips (many small jobs) or for one heavy job (shuffle /
+wall (noop sink), and the number of Spark jobs each phase submitted,
+counted in every job group (streaming micro-batches run under their
+query's group) — the decomposition that tells whether a slow query
+is paying for driver round trips (many small jobs) or for one heavy job (shuffle /
 compute), which picks the guide §1 vs §2 lever.
 
 Run: python tools/profile_query.py <query> [<query> ...]
@@ -21,29 +22,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract
+from perfbench.common import total_jobs
 from stream_processing_system_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def n_jobs(spark) -> int:
-    """Total jobs submitted so far (Java SparkStatusTracker)."""
-    t = spark._jsparkSession.sparkContext().statusTracker()
-    return len(t.getJobIdsForGroup(None))
 
 
 def profile(spark, qs, name: str) -> dict:
     # warm-up: codegen + parquet footer caches, so the profile
     # measures the plan, not first-touch JIT
     qs[name](spark, SF).write.format("noop").mode("overwrite").save()
-    j0 = n_jobs(spark)
+    j0 = total_jobs(spark)
     t0 = time.perf_counter()
     df = qs[name](spark, SF)
     t1 = time.perf_counter()
-    j1 = n_jobs(spark)
+    j1 = total_jobs(spark)
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
-    j2 = n_jobs(spark)
+    j2 = total_jobs(spark)
     return {
         "name": name,
         "build_s": round(t1 - t0, 3),

@@ -1,11 +1,14 @@
 """Gated A/B min-of-N: refuses to measure until the q1_wordcount
 calibration probe certifies a quiet window (min-of-3 under a
-threshold), then times the named queries min-of-N. Used for paired
-before/after adjudication when the host's steal windows make single
-quiet_min3 runs unreliable.
+threshold), then times the named queries min-of-N after a warm-up
+each, and re-probes afterwards. Used for paired before/after
+adjudication when the host's steal windows make ungated runs
+unreliable; `inf 3` skips the gate and takes the plain quiet-window
+re-measure (warm-up, min-of-3, bracketing q1_wordcount probes).
 
 Run: python tools/quiet_ab.py <threshold> <n> <query> [...]
-  → {"probe": s, "minN": {...}, "waited_s": s}
+  → {"probe": s, "probe_after": s, "minN": {...}, "waited_s": s,
+     "sf": dir}
 """
 
 from __future__ import annotations
